@@ -72,9 +72,6 @@ from bingo2sql_spark.pipeline import replay
 
 cores, raw_dir, n_events, wire = int(sys.argv[1]), sys.argv[2], int(sys.argv[3]), sys.argv[4]
 strategy = sys.argv[5] if len(sys.argv) > 5 else "full"
-merge_impl = sys.argv[6] if len(sys.argv) > 6 else "hash"
-rows_per_task = int(sys.argv[7]) if len(sys.argv) > 7 else 0
-tasks_per_core = int(sys.argv[8]) if len(sys.argv) > 8 else 4
 tmp = tempfile.mkdtemp(prefix=f"scale{{cores}}_", dir="/dev/shm" if os.path.isdir("/dev/shm") else None)
 spark = get_spark(f"scaling-{{cores}}", master=f"local[{{cores}}]", shuffle_partitions=cores,
                   extra_conf={{"spark.local.dir": tmp + "/spark-local"}})
@@ -86,20 +83,8 @@ replay(decode(raw.filter("seq % 50 = 0"), before_fields=KEYS), warm, batch_id="w
 # "auto" carries the measured single-host crossover floor (~10M
 # candidate rows, BENCH/BASELINE.md round-6): below it the full plan
 # wins on tmpfs, above it the election's byte cut pays locally too
-# pass the r8 merge knobs only where the tree under test knows them —
-# ab_check runs this same template against a PREVIOUS round's checkout
-import inspect
-_params = inspect.signature(IcebergLiteTable.__init__).parameters
-_kw = {{}}
-if "merge_impl" in _params:
-    _kw.update(merge_impl=merge_impl,
-               merge_rows_per_task=rows_per_task or None,
-               merge_tasks_per_core=tasks_per_core)
-elif merge_impl != "hash" or rows_per_task or tasks_per_core != 4:
-    raise SystemExit("tree under test lacks the r8 merge knobs")
 t = IcebergLiteTable(tmp + "/tgt", n_buckets=64, merge_strategy=strategy,
-                     election_min_rows=10_000_000 if strategy == "auto" else 0,
-                     **_kw)
+                     election_min_rows=10_000_000 if strategy == "auto" else 0)
 t0 = time.time()
 replay(decode(raw, before_fields=KEYS), t, batch_id="b", tables=["repo_files"])
 secs = time.time() - t0
@@ -115,12 +100,11 @@ shutil.rmtree(tmp, ignore_errors=True)
 
 
 def run_one(cores: int, raw_dir: str, n_events: int, wire: str,
-            strategy: str = "full", merge_impl: str = "hash",
-            rows_per_task: int = 0, tasks_per_core: int = 4) -> float:
+            strategy: str = "full") -> float:
     out = subprocess.run(
         ["taskset", "-c", f"0-{cores - 1}", sys.executable, "-c",
          CHILD.format(repo=REPO), str(cores), raw_dir, str(n_events), wire,
-         strategy, merge_impl, str(rows_per_task), str(tasks_per_core)],
+         strategy],
         capture_output=True, text=True, timeout=1200,
     )
     for line in reversed(out.stdout.strip().splitlines()):
@@ -153,16 +137,6 @@ def main() -> None:
                          "bucket-aligned (partitioned by the target table's "
                          "bucket function — the partition-keyed-transport "
                          "shape; typed wire only)")
-    ap.add_argument("--merge-impl", choices=("hash", "sort"), default="hash",
-                    help="row-level winner resolution: hash max_by aggregate "
-                         "or sort + row_number (bounded cache footprint)")
-    ap.add_argument("--rows-per-task", type=int, default=0,
-                    help="target candidate rows per merge task (0 = 4x-core "
-                         "default); finer tasks keep hash-agg state "
-                         "cache-resident")
-    ap.add_argument("--tasks-per-core", type=int, default=4,
-                    help="merge-exchange tasks per core (bucket-pure, so "
-                         "more tasks never change the file count)")
     ap.add_argument("--out", default=os.path.join(REPO, "BENCH", "BASELINE.md"))
     args = ap.parse_args()
 
@@ -191,8 +165,7 @@ def main() -> None:
             for cores in (args.n, args.n * 4):
                 times[cores].append(
                     run_one(cores, raw_dir, args.events, args.wire,
-                            args.merge_strategy, args.merge_impl,
-                            args.rows_per_task, args.tasks_per_core))
+                            args.merge_strategy))
         results = {}
         for cores, ts in times.items():
             ts = sorted(ts)

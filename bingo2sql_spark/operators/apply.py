@@ -126,7 +126,6 @@ def _merge_batch(
     emit_changed: bool = False,
     elect: bool = False,
     win: DataFrame | None = None,
-    impl: str = "hash",
 ) -> DataFrame:
     """The MERGE: per-key LWW by source seq over stored ∪ batch rows
     (collapses multiple events per key within the batch too). Tombstones
@@ -161,20 +160,7 @@ def _merge_batch(
     `win` — an already-materialized winning-seq set (the runtime
     "auto" fallback persisted + counted it to check the broadcast
     bound, VERDICT r5 #3): used as-is so the broadcast reads the
-    cached blocks instead of recomputing the election aggregate.
-
-    impl="sort" (VERDICT r7 #1 — the LLC-bound merge): resolve
-    row-level winners with a SORT-based plan — local sort by (bucket,
-    keys, seq desc) then row_number()==1 — instead of the hash
-    aggregate. The hash plan holds one full winner row per distinct key
-    in a per-task map; past ~10M candidate rows those maps outgrow the
-    shared last-level cache and every probe is a DRAM round-trip, which
-    caps N-vs-4N scaling (r7 measured 0.73 at 32M events). The sort
-    plan's working set is the radix-sort run buffer — sequential,
-    cache-friendly, spill-graceful — and the window still needs NO
-    extra exchange (hash(bucket) satisfies its clustered distribution).
-    Row-level merges only; MINIMAL-image merges are per-COLUMN
-    aggregations with no sort-based equivalent and always use hash."""
+    cached blocks instead of recomputing the election aggregate."""
     both = current.unionByName(batch_rows)
     if elect:
         if partial:
@@ -185,17 +171,6 @@ def _merge_batch(
             F.broadcast(win), both["_ingest_seq"] == win["_win_seq"], "left_semi"
         )
     both = both.repartition(n_out, "bucket")
-    if impl == "sort" and not partial:
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("bucket", *S.MERGE_KEYS).orderBy(
-            F.col("_ingest_seq").desc()
-        )
-        return (
-            both.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(*all_cols, *INTERNAL_COLS)
-        )
     return _per_key_winners(both, all_cols, partial, emit_changed)
 
 
@@ -376,9 +351,6 @@ class IcebergLiteTable:
         merge_strategy: str = "full",
         election_max_rows: int = 50_000_000,
         election_min_rows: int = 0,
-        merge_impl: str = "hash",
-        merge_rows_per_task: int | None = None,
-        merge_tasks_per_core: int = 4,
     ):
         if write_mode not in ("cow", "mor"):
             raise ValueError(f"write_mode must be 'cow' or 'mor', got {write_mode!r}")
@@ -387,8 +359,6 @@ class IcebergLiteTable:
                 f"merge_strategy must be 'auto', 'election' or 'full', "
                 f"got {merge_strategy!r}"
             )
-        if merge_impl not in ("hash", "sort"):
-            raise ValueError(f"merge_impl must be 'hash' or 'sort', got {merge_impl!r}")
         self.path = path
         self.n_buckets = n_buckets
         self.write_mode = write_mode
@@ -454,27 +424,6 @@ class IcebergLiteTable:
         self.merge_strategy = merge_strategy
         self.election_max_rows = election_max_rows
         self.election_min_rows = election_min_rows
-        #: winner-resolution plan for ROW-LEVEL merges: "hash" (max_by
-        #: aggregate — map-side combinable, right when versions-per-key
-        #: is high or candidate sets are small) or "sort" (local sort +
-        #: row_number — bounded cache footprint, right when per-task
-        #: winner maps outgrow the LLC; see _merge_batch). MINIMAL
-        #: merges are per-column and always hash.
-        self.merge_impl = merge_impl
-        #: when set, the merge exchange targets ~this many rows per
-        #: output partition (still bucket-pure, still capped by the
-        #: affected-bucket count): finer tasks keep each hash-aggregate
-        #: working set cache-resident at large candidate counts. None =
-        #: the 4x-core default.
-        self.merge_rows_per_task = merge_rows_per_task
-        #: merge-exchange tasks per core (default 4x — see the n_out
-        #: comment in commit). Bucket-pure partitions mean MORE tasks
-        #: never change the output file count (a bucket lands in exactly
-        #: one partition either way), so raising this only trades task
-        #: overhead for smaller per-task aggregate state — the lever for
-        #: keeping hash-merge working sets cache-resident on initial
-        #: loads, where no row estimate exists yet.
-        self.merge_tasks_per_core = merge_tasks_per_core
         os.makedirs(os.path.join(path, MANIFEST_DIR), exist_ok=True)
 
     # -- manifest bookkeeping ------------------------------------------------
@@ -1132,21 +1081,7 @@ class IcebergLiteTable:
             # (~±sqrt(buckets/partition)) makes the slowest task the stage
             # time; smaller tasks let dynamic scheduling balance it.
             par = batch.sparkSession.sparkContext.defaultParallelism
-            n_out = max(1, min(len(affected), self.merge_tasks_per_core * par))
-            if self.merge_rows_per_task:
-                # cache-resident merge tasks (VERDICT r7 #1): size the
-                # bucket exchange so each task's candidate set stays
-                # ~merge_rows_per_task rows — free from manifest counts
-                # + the pre-pass, never a data job. Still bucket-pure
-                # (cap = #affected): finer than one-bucket tasks would
-                # break the one-writer-per-bucket file layout, so VERY
-                # large tables want more n_buckets, not more splits.
-                est = self._stored_rows_estimate(m, affected) + (
-                    batch_counts["rows"] if batch_counts else 0
-                )
-                if est > 0:
-                    want = -(-est // self.merge_rows_per_task)  # ceil
-                    n_out = max(1, min(len(affected), max(4 * par, want)))
+            n_out = max(1, min(len(affected), 4 * par))
             # key-only election decision (see merge_strategy docstring):
             # "auto" elects when the candidate-key count fits the
             # winning-seq broadcast bound. When manifest metadata + the
@@ -1215,7 +1150,6 @@ class IcebergLiteTable:
             merged = _merge_batch(
                 current, batch_rows, all_cols, partial, n_out,
                 emit_changed=mor and partial, elect=elect, win=win_df,
-                impl=self.merge_impl,
             )
             merged = merged.withColumn("pbucket", F.col("bucket"))
             # per-ATTEMPT unique data dir (VERDICT r5 #6): two writers
@@ -1396,12 +1330,23 @@ class IcebergLiteTable:
         the old head still resolve correctly against the new table.
         Batch-id bookkeeping intentionally does NOT carry over (ids
         were scoped to the old table's history); the new table starts
-        a fresh exactly-once ledger."""
+        a fresh exactly-once ledger. Every policy field except the
+        bucket count (MOR compaction triggers, merge strategy and its
+        election bounds) carries over."""
         raw = self._read_raw(spark)
         batch = raw.select(
             *[c for c in raw.columns if c not in ("bucket",)]
         ).withColumnRenamed("_ingest_seq", "_seq")
-        dst = IcebergLiteTable(new_path, n_buckets=n_buckets, write_mode=self.write_mode)
+        dst = IcebergLiteTable(
+            new_path,
+            n_buckets=n_buckets,
+            write_mode=self.write_mode,
+            max_delta_depth=self.max_delta_depth,
+            max_read_amplification=self.max_read_amplification,
+            merge_strategy=self.merge_strategy,
+            election_max_rows=self.election_max_rows,
+            election_min_rows=self.election_min_rows,
+        )
         dst.commit(batch, batch_id="rebucket-from-source")
         return dst
 

@@ -103,49 +103,70 @@ def test_render_golden_shapes(spark, small_events):
     assert dele.startswith("DELETE FROM `test`.`repo_files` WHERE `repo`='")
 
 
-def test_render_arrow_matches_expr(spark, small_events):
-    """Vectorized pandas renderer == column-expression renderer."""
-    from bingo2sql_spark.functions.render import render_sql, render_sql_arrow
+def test_render_flag_goldens(spark):
+    """Exact statements across render_sql's flag grid. minimal_update
+    =False puts every payload column in SET, in payload order, NULL as
+    `NULL`; no_primary_key drops key columns from INSERT only (UPDATE
+    and DELETE still need them for WHERE). render_sql_inline batches the
+    insert run with the same no_primary_key column list."""
+    from datetime import datetime
 
-    sample = small_events.filter("seq % 7 = 0")
-    for minimal_update in (True, False):
-        for no_primary_key in (True, False):
-            a = {
+    from bingo2sql_spark import schema as S
+    from bingo2sql_spark.functions.render import render_sql, render_sql_inline
+
+    def ev(seq, op, b, a):
+        return (seq, "bin.1", seq, "u", seq, datetime(2024, 1, 1), 1, "test",
+                "repo_files", op, b, a, None, 1)
+
+    r0 = ("r0", "p0", "c0", "go", "x'0", None)
+    r1 = ("r1", "p1", "c1", None, "x1", "main")
+    env = spark.createDataFrame(
+        [
+            ev(0, "insert", None, r0),
+            ev(1, "insert", None, r1),
+            ev(2, "update", r0, ("r0", "p0", "c2", "go", None, "dev")),
+            ev(3, "delete", r1, None),
+        ],
+        S.envelope_schema(),
+    )
+    tbl = "`test`.`repo_files`"
+    full_cols = "(`repo`,`path`,`commit`,`lang`,`content`,`branch`)"
+    nopk_cols = "(`commit`,`lang`,`content`,`branch`)"
+    where0 = " WHERE `repo`='r0' AND `path`='p0';"
+    dele = f"DELETE FROM {tbl} WHERE `repo`='r1' AND `path`='p1';"
+    upd_min = f"UPDATE {tbl} SET `commit`='c2',`content`=NULL,`branch`='dev'" + where0
+    upd_full = (
+        f"UPDATE {tbl} SET `repo`='r0',`path`='p0',`commit`='c2',`lang`='go',"
+        "`content`=NULL,`branch`='dev'" + where0
+    )
+    for minimal_update, upd in ((True, upd_min), (False, upd_full)):
+        for no_primary_key, ins_cols, v0, v1 in (
+            (False, full_cols, "('r0','p0','c0','go','x\\'0',NULL)",
+             "('r1','p1','c1',NULL,'x1','main')"),
+            (True, nopk_cols, "('c0','go','x\\'0',NULL)", "('c1',NULL,'x1','main')"),
+        ):
+            got = {
                 r["seq"]: r["sql"]
                 for r in render_sql(
-                    sample, minimal_update=minimal_update, no_primary_key=no_primary_key
-                ).select("seq", "sql").collect()
-            }
-            b = {
-                r["seq"]: r["sql"]
-                for r in render_sql_arrow(
-                    sample, minimal_update=minimal_update, no_primary_key=no_primary_key
+                    env, minimal_update=minimal_update, no_primary_key=no_primary_key
                 ).collect()
             }
-            assert a == b, (minimal_update, no_primary_key)
-
-
-def test_render_arrow_inline_matches_jvm(spark, small_events):
-    """Arrow multi-row batching == JVM render_sql_inline across the flag
-    grid (r2 gap: the Arrow path lacked no_primary_key and run
-    batching — the designated codec path silently lost two reference
-    flags)."""
-    from bingo2sql_spark.functions.render import render_sql_arrow_inline, render_sql_inline
-
-    for no_primary_key in (True, False):
-        a = {
-            r["seq"]: r["sql"]
-            for r in render_sql_inline(
-                small_events, batch_rows=10, no_primary_key=no_primary_key
-            ).select("seq", "sql").collect()
-        }
-        b = {
-            r["seq"]: r["sql"]
-            for r in render_sql_arrow_inline(
-                small_events, batch_rows=10, no_primary_key=no_primary_key
-            ).collect()
-        }
-        assert a == b, no_primary_key
+            assert got == {
+                0: f"INSERT INTO {tbl}{ins_cols} VALUES{v0};",
+                1: f"INSERT INTO {tbl}{ins_cols} VALUES{v1};",
+                2: upd,
+                3: dele,
+            }, (minimal_update, no_primary_key)
+    inline = {
+        r["seq"]: r["sql"]
+        for r in render_sql_inline(env, batch_rows=10, no_primary_key=True).collect()
+    }
+    assert inline == {
+        0: f"INSERT INTO {tbl}{nopk_cols} VALUES('c0','go','x\\'0',NULL),"
+        "('c1',NULL,'x1','main');",
+        2: upd_min,
+        3: dele,
+    }
 
 
 def test_render_escaping(spark):
@@ -162,7 +183,7 @@ def test_render_escaping(spark):
             (
                 1, "bin.1", 4, "u", 1, datetime(2024, 1, 1), 1, "test", "repo_files", "insert",
                 None,
-                ("r'1", "a\\b", "c1", "go", "x'y\\z\nq\x00u\x1av\"w", None),
+                ("r'1", "a\\b", "c1", "go", "x'y\\z\nq\x00u\x1av\"w\rh", None),
                 None, 1,
             )
         ],
@@ -172,31 +193,8 @@ def test_render_escaping(spark):
     assert "'r\\'1'" in sql
     assert "'a\\\\b'" in sql
     # full escapeBytesBackslash set: NUL -> \0, Ctrl-Z -> \Z, " -> \"
-    assert "x\\'y\\\\z\\nq\\0u\\Zv\\\"w" in sql
-    assert "\x00" not in sql and "\x1a" not in sql
-
-
-def test_render_arrow_escaping_matches_expr(spark):
-    """The pandas renderer escapes the same character set."""
-    from datetime import datetime
-
-    from bingo2sql_spark import schema as S
-    from bingo2sql_spark.functions.render import render_sql, render_sql_arrow
-
-    env = spark.createDataFrame(
-        [
-            (
-                1, "bin.1", 4, "u", 1, datetime(2024, 1, 1), 1, "test", "repo_files", "insert",
-                None,
-                ("r1", "p1", "c1", "go", "a\x00b\x1ac\"d'e\\f\ng\rh", None),
-                None, 1,
-            )
-        ],
-        S.envelope_schema(),
-    )
-    a = render_sql(env).collect()[0]["sql"]
-    b = render_sql_arrow(env).collect()[0]["sql"]
-    assert a == b
+    assert "x\\'y\\\\z\\nq\\0u\\Zv\\\"w\\rh" in sql
+    assert not any(ch in sql for ch in "\x00\x1a\n\r")
 
 
 def test_minimal_row_image_changed_cols(spark):
@@ -407,11 +405,6 @@ def test_render_ddl_emission(spark):
     assert out[0]["sql"] == "USE `meta`;\nALTER TABLE `meta`.`audit_log` ADD COLUMN x INT;"
     # without a statement column, ddl rows are filtered (old behavior)
     assert render_sql(base.drop("statement")).count() == 0
-    # Arrow renderer parity
-    from bingo2sql_spark.functions.render import render_sql_arrow
-
-    assert render_sql_arrow(base).collect()[0]["sql"] == out[0]["sql"]
-    assert render_sql_arrow(base.drop("statement")).count() == 0
 
 
 def test_render_no_primary_key(spark, small_events):

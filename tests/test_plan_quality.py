@@ -337,32 +337,6 @@ def test_election_merge_plan_shape(spark, small_events, tmp_path):
     assert "LeftSemi" in seg, seg
 
 
-def test_sort_merge_plan_single_exchange(spark):
-    """merge_impl='sort' (r7 #1): the window's clustered distribution is
-    satisfied by the existing hash(bucket) exchange — the sort plan pays
-    ONE exchange + a local sort, never a second shuffle; and no hash
-    aggregate holds per-key winner state (the LLC-bound structure the
-    sort impl exists to avoid)."""
-    from bingo2sql_spark.operators import resolve as R
-    from bingo2sql_spark.operators.apply import _merge_batch, bucket_col
-    from bingo2sql_spark.sources.synth import generate_events
-
-    ev = generate_events(spark, n_keys=200, versions_per_key=4)
-    rows = R.to_upsert_rows(R.with_key(ev)).withColumn(
-        "bucket", bucket_col(16)
-    ).withColumnRenamed("_seq", "_ingest_seq")
-    all_cols = ["repo", "path", "commit", "lang", "content", "branch"]
-    merged = _merge_batch(rows.limit(0), rows, all_cols, partial=False,
-                          n_out=8, impl="sort")
-    plan = _plan(merged)
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    frag = plan.split("Exchange hashpartitioning", 1)[1][:120]
-    assert "bucket" in frag, frag
-    assert "Window" in plan and "Sort" in plan, plan
-    # row-winner resolution must NOT be a hash aggregate in this impl
-    assert "max_by" not in plan, plan
-
-
 def test_bucket_aligned_landing_feeds_pass_through_exchange(spark, tmp_path):
     """land_bucket_aligned (r7 #1): the landing is physically
     partitioned by the TABLE's bucket function, decode projects the

@@ -1,7 +1,8 @@
-"""Hypothesis property tests for the pure (pandas/python-level)
-functions — no SparkSession, so these fuzz thousands of cases cheaply:
-escaping safety, codec exactness, unsigned reinterpretation, sampling
-thresholds."""
+"""Hypothesis property tests: escaping safety of the shipped SQL literal
+(run through the session SparkSession, a few dozen batched examples),
+and — with no SparkSession — codec exactness, unsigned
+reinterpretation and sampling thresholds, fuzzed over thousands of
+cases."""
 
 from __future__ import annotations
 
@@ -10,8 +11,9 @@ import decimal
 import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
-from bingo2sql_spark.functions.render import _esc_pandas
+from bingo2sql_spark.functions.render import sql_literal
 from bingo2sql_spark.functions.sampling import threshold_hex
 from bingo2sql_spark.sources import codecs as C
 from bingo2sql_spark.sources.decode import unsigned_fixup
@@ -37,22 +39,31 @@ def _unescape(s: str) -> str:
     return "".join(out)
 
 
-@given(TEXT)
-@settings(max_examples=500, deadline=None)
-def test_escape_roundtrip_and_safety(s):
-    esc = _esc_pandas(pd.Series([s], dtype="object")).iloc[0]
-    # no raw quote/NUL/Ctrl-Z/newline survives unescaped -> the literal
-    # can never terminate early or corrupt the file
-    assert "\x00" not in esc and "\x1a" not in esc
-    i = 0
-    while i < len(esc):
-        if esc[i] == "\\":
-            i += 2
+@given(st.lists(st.none() | TEXT, min_size=1, max_size=40))
+@settings(max_examples=25, deadline=None)
+def test_escape_roundtrip_and_safety(spark, values):
+    """sql_literal, the escape render_sql ships: one DataFrame per
+    example, one literal per value."""
+    df = spark.createDataFrame([(v,) for v in values], "v string")
+    lits = [r["lit"] for r in df.select(sql_literal(F.col("v")).alias("lit")).collect()]
+    for s, lit in zip(values, lits, strict=True):
+        if s is None:
+            assert lit == "NULL"
             continue
-        assert esc[i] not in ("'", '"'), f"unescaped quote in {esc!r}"
-        i += 1
-    # MySQL's unescape recovers the original bytes exactly
-    assert _unescape(esc) == s
+        assert lit[0] == lit[-1] == "'" and len(lit) >= 2
+        esc = lit[1:-1]
+        # no raw quote/NUL/Ctrl-Z/newline survives unescaped -> the
+        # literal can never terminate early or corrupt the file
+        assert not any(ch in esc for ch in "\x00\x1a\n\r")
+        i = 0
+        while i < len(esc):
+            if esc[i] == "\\":
+                i += 2
+                continue
+            assert esc[i] not in ("'", '"'), f"unescaped quote in {esc!r}"
+            i += 1
+        # MySQL's unescape recovers the original bytes exactly
+        assert _unescape(esc) == s
 
 
 @given(st.integers(min_value=-(1 << 63), max_value=(1 << 63) - 1), st.sampled_from([8, 16, 24, 32]))

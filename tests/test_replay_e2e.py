@@ -703,6 +703,22 @@ def test_rebucket_full_rewrite(spark, small_events, tmp_path):
     m = replay(old, dst, batch_id="load")  # same id as src's — new ledger
     assert not m["skipped"]
     assert dst.state_checksum(spark) == src.state_checksum(spark)
+    # every policy field but the bucket count carries over: a MOR table
+    # keeps its inline-compaction triggers and merge-strategy bounds
+    policy = dict(
+        write_mode="mor", max_delta_depth=1, max_read_amplification=1e9,
+        merge_strategy="election", election_max_rows=123_456,
+        election_min_rows=7,
+    )
+    msrc = IcebergLiteTable(str(tmp_path / "msrc"), n_buckets=8, **policy)
+    replay(small_events.filter("seq % 2 = 0"), msrc, batch_id="m0")
+    mdst = msrc.rebucket(spark, str(tmp_path / "mdst"), n_buckets=4)
+    assert mdst.n_buckets == 4
+    assert {k: getattr(mdst, k) for k in policy} == policy
+    # the copy lands as one delta (depth 1); the next commit passes the
+    # carried depth of 1 and compacts inline
+    m = replay(small_events.filter("seq % 2 = 1"), mdst, batch_id="m1")
+    assert m.get("compacted_to") and m["compaction_trigger"] == "delta_depth"
 
 
 def test_concurrent_commit_retry_converges(spark, small_events, tmp_path, monkeypatch):
@@ -1852,43 +1868,6 @@ def test_drop_then_readd_same_batch_loses_old_values(spark, tmp_path):
     replay(events1, tm, batch_id="b1", table_meta=meta, evolve_from_ddl=True)
     with pytest.raises(ValueError, match="compact"):
         replay(events2, tm, batch_id="b2", table_meta=meta, evolve_from_ddl=True)
-
-
-def test_merge_impl_sort_equivalence(spark, tmp_path):
-    """VERDICT r7 #1: the sort-based winner resolution (local sort +
-    row_number over the bucket exchange — bounded cache footprint) is
-    state-identical to the hash max_by plan across initial load,
-    incremental commit, and election, tombstones included."""
-    from bingo2sql_spark.sources.synth import generate_events
-
-    ev1 = generate_events(spark, n_keys=400, versions_per_key=6, seed=3)
-    ev2 = generate_events(spark, n_keys=400, versions_per_key=6, seed=9)
-    tables = {}
-    for name, kw in {
-        "hash": {},
-        "sort": {"merge_impl": "sort"},
-        "sort_elect": {"merge_impl": "sort", "merge_strategy": "election"},
-        "sort_fine": {"merge_impl": "sort", "merge_rows_per_task": 100},
-    }.items():
-        t = IcebergLiteTable(str(tmp_path / name), n_buckets=16, **kw)
-        replay(ev1, t, batch_id="b1", tables=["repo_files"])
-        replay(ev2, t, batch_id="b2", tables=["repo_files"])
-        tables[name] = t.state_checksum(spark)
-    assert tables["sort"] == tables["hash"]
-    assert tables["sort_elect"] == tables["hash"]
-    assert tables["sort_fine"] == tables["hash"]
-    # tombstones survive the sort plan: a fresh older replay cannot
-    # resurrect deleted keys (same invariant the hash plan pins)
-    t = IcebergLiteTable(str(tmp_path / "sort_tomb"), n_buckets=16,
-                         merge_impl="sort")
-    replay(ev1, t, batch_id="b1", tables=["repo_files"])
-    replay(ev1.filter("op = 'insert'"), t, batch_id="b_old",
-           tables=["repo_files"])
-    ref = IcebergLiteTable(str(tmp_path / "hash_tomb"), n_buckets=16)
-    replay(ev1, ref, batch_id="b1", tables=["repo_files"])
-    replay(ev1.filter("op = 'insert'"), ref, batch_id="b_old",
-           tables=["repo_files"])
-    assert t.state_checksum(spark) == ref.state_checksum(spark)
 
 
 def test_bucket_aligned_landing_replay(spark, tmp_path):
